@@ -205,7 +205,7 @@ def _scan_files(
     spark: SparkSession, path: str, version: int, files: list[str]
 ) -> DataFrame | None:
     """Position-tagged scan of an explicit relative-file subset of a
-    version (zonemap's grouped basePath reader). None when empty."""
+    version (``versioned._scan_snapshot``). None when empty."""
     if not files:
         return None
     from temp_data_pipeline_spark.operators.zonemap import _read_files

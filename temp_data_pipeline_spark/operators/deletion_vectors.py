@@ -68,10 +68,11 @@ from temp_data_pipeline_spark.operators.versioned import (
     _check_schema_against_manifest,
     _fs,
     _manifest_dirs,
-    _rel_file,
     _rel_from_any,
     _resolve_version,
+    _scan_snapshot,
     commit_version,
+    job_desc,
     read_manifest,
     read_version,
 )
@@ -80,78 +81,6 @@ from temp_data_pipeline_spark.operators.versioned import (
 def _dv_name(spark: SparkSession, path: str, version: int) -> str | None:
     name = read_manifest(spark, path, version).get("_dv")
     return name or None
-
-
-def _scan_with_positions(
-    spark: SparkSession, path: str, version: int
-) -> DataFrame:
-    """All rows of a version tagged (file, pos) from the parquet
-    reader's metadata columns — the positional identity DVs are
-    defined over. Files are tagged by their TABLE-RELATIVE path
-    (``versioned._rel_file``) so a copied/relocated table keeps
-    resolving its deletion vectors, matching the relative
-    ``data_dirs`` manifest convention."""
-    from functools import reduce
-
-    from pyspark.errors.exceptions.captured import AnalysisException
-
-    from temp_data_pipeline_spark.operators.versioned import (
-        _dir_root,
-        _disk_schema_and_rename,
-    )
-
-    man = read_manifest(spark, path, version)
-
-    def _scan(d: str) -> DataFrame:
-        # per-dir read schema: dirs written before a column rename
-        # scan under their ON-DISK names and align to the current
-        # names by stable field id (versioned._disk_schema_and_rename)
-        read_schema, align = _disk_schema_and_rename(man, d)
-        r = (
-            spark.read.schema(read_schema)
-            if read_schema is not None
-            else spark.read
-        )
-        root = _dir_root(path, man, d)
-        if "/" in d:
-            r = r.option("basePath", f"{root}/{d.split('/', 1)[0]}")
-        branch = r.parquet(f"{root}/{d}")
-        tagged = branch.select(
-            _rel_file(d).alias("_dv_file"),
-            F.col("_metadata.row_index").alias("_dv_pos"),
-            *branch.columns,
-        )
-        if align is not None:
-            tagged = align(tagged, keep=("_dv_file", "_dv_pos"))
-        return tagged
-
-    frames = []
-    for d in _manifest_dirs(man):
-        try:
-            frames.append(_scan(d))
-        except AnalysisException as exc:
-            # only a genuinely EMPTY dir (zero-row legacy commit with
-            # no recorded schema) is skippable; an unreadable or
-            # mis-vacuumed carried dir must propagate, or a MOR
-            # delete silently misses its rows (ADVICE r6)
-            if "UNABLE_TO_INFER_SCHEMA" in str(exc):
-                continue
-            raise
-    if not frames:
-        raise FileNotFoundError(
-            f"version {version} under {path} has no data files"
-        )
-    from temp_data_pipeline_spark.operators.versioned import (
-        _align_partition_types,
-    )
-
-    # partition columns inferred from dir names must come back with
-    # the manifest schema's types (booleans/narrow ints drift under
-    # inference) — otherwise a MOR writer's re-appended rows fail the
-    # commit schema check on a boolean-partitioned table
-    return _align_partition_types(
-        reduce(lambda a, b: a.unionByName(b), frames), man
-    )
 
 
 # Driver-side sidecar read gate for dv_file_names: below this many
@@ -429,7 +358,7 @@ def _visible_tagged(
     """The position-tagged VISIBLE rows of ``base`` — the frame every
     MOR writer starts from (already-deleted rows must neither match
     again nor re-enter a DV)."""
-    tagged = _scan_with_positions(spark, path, base)
+    tagged = _scan_snapshot(spark, path, man, tag="position")
     if man.get("_dv"):
         tagged = _anti_dv(
             tagged, read_dv(spark, path, base), man.get("_dv_rows")
@@ -565,7 +494,7 @@ def read_table(
     if not man.get("_dv"):
         return read_version(spark, path, version)
     dv = read_dv(spark, path, version)
-    tagged = _scan_with_positions(spark, path, version)
+    tagged = _scan_snapshot(spark, path, man, tag="position")
     return _subtract_dv(tagged, dv, man.get("_dv_rows"))
 
 
@@ -670,8 +599,6 @@ def _commit_with_dv(
     from pyspark.sql import Observation
 
     obs = Observation()
-    from temp_data_pipeline_spark.operators.versioned import job_desc
-
     with job_desc(spark, f"MOR: dv sidecar write {path}"):
         (
             # repartition(1), NOT coalesce(1): the position-finding
@@ -751,43 +678,51 @@ def commit_update_mor(
         predicate = F.expr(predicate)
     base = _resolve_version(spark, path, None)
     man = read_manifest(spark, path, base)
-    # persist the delta-sized matched frame: the update runs THREE
-    # actions over it (emptiness probe, DV sidecar write, updated-rows
-    # append) and each would otherwise re-run the full position scan —
-    # the probe materializes the cache, the two writes hit it
-    matched = (
-        _visible_tagged(spark, path, base, man)
-        .filter(F.coalesce(predicate, F.lit(False)))
-        .persist()
-    )
-    try:
-        if matched.isEmpty():
-            return base
-        dv_new = matched.select(
-            F.col("_dv_file").alias("file"), F.col("_dv_pos").alias("pos")
+    # every job from the position scan on carries the statement's
+    # label — the emptiness probe and AQE's broadcast jobs too
+    with job_desc(spark, f"MOR: update {path}"):
+        # persist the delta-sized matched frame: the update runs THREE
+        # actions over it (emptiness probe, DV sidecar write,
+        # updated-rows append) and each would otherwise re-run the full
+        # position scan — the probe materializes the cache, the two
+        # writes hit it
+        matched = (
+            _visible_tagged(spark, path, base, man)
+            .filter(F.coalesce(predicate, F.lit(False)))
+            .persist()
         )
-        data_cols = [
-            c for c in matched.columns if c not in ("_dv_file", "_dv_pos")
-        ]
-        updated = matched.select(*data_cols)
-        for col, expr in set_exprs.items():
-            if col not in data_cols:
-                raise ValueError(f"SET targets unknown column {col!r}")
-            updated = updated.withColumn(
-                col, F.expr(expr) if isinstance(expr, str) else expr
+        try:
+            if matched.isEmpty():
+                return base
+            dv_new = matched.select(
+                F.col("_dv_file").alias("file"), F.col("_dv_pos").alias("pos")
             )
-        # GENERATED columns not explicitly SET recompute from the
-        # updated row — an UPDATE changing a referenced base column
-        # must not carry the stale derived value into the __generated_
-        # commit check (explicit SETs keep their value and validate
-        # there instead)
-        _types = {f.name: f.dataType for f in updated.schema.fields}
-        for gc, ge in (man.get("_generated_columns") or {}).items():
-            if gc in data_cols and gc not in set_exprs:
-                updated = updated.withColumn(gc, F.expr(ge).cast(_types[gc]))
-        return _commit_with_dv(spark, path, base, man, dv_new, updated, meta)
-    finally:
-        matched.unpersist()
+            data_cols = [
+                c for c in matched.columns if c not in ("_dv_file", "_dv_pos")
+            ]
+            updated = matched.select(*data_cols)
+            for col, expr in set_exprs.items():
+                if col not in data_cols:
+                    raise ValueError(f"SET targets unknown column {col!r}")
+                updated = updated.withColumn(
+                    col, F.expr(expr) if isinstance(expr, str) else expr
+                )
+            # GENERATED columns not explicitly SET recompute from the
+            # updated row — an UPDATE changing a referenced base column
+            # must not carry the stale derived value into the
+            # __generated_ commit check (explicit SETs keep their value
+            # and validate there instead)
+            _types = {f.name: f.dataType for f in updated.schema.fields}
+            for gc, ge in (man.get("_generated_columns") or {}).items():
+                if gc in data_cols and gc not in set_exprs:
+                    updated = updated.withColumn(
+                        gc, F.expr(ge).cast(_types[gc])
+                    )
+            return _commit_with_dv(
+                spark, path, base, man, dv_new, updated, meta
+            )
+        finally:
+            matched.unpersist()
 
 
 def commit_upsert_mor(

@@ -11,6 +11,16 @@ Hadoop-FS primitives:
   <path>/_manifest/<N>.json   commit marker — a version EXISTS only
                               once its manifest file does
 
+A FILE-LESS version is legal and common: a commit whose rows are
+provably zero (every MOR DELETE, schema/property/constraint carries,
+an empty CDC window, a typed CREATE TABLE) writes no parquet at all —
+its ``v=<N>`` is a bare, empty directory (no part files, no
+``_SUCCESS``), listed in ``data_dirs`` like any other, and its schema
+lives only in the manifest's ``_schema``. Readers declare that schema
+instead of inferring one, so the bare dir scans as zero rows; fsck
+and vacuum must treat it as a referenced data dir, not as an orphan
+or a torn write.
+
 Write protocol: data lands in ``v=<N>`` first (invisible — readers
 only trust manifested versions), then the manifest is created with a
 write-temp-then-rename, which is atomic on HDFS and object-store
@@ -378,11 +388,12 @@ def _rel_file(d: str):
     vectors, zone maps, Bloom indexes) key files by this form so a
     copied/relocated table keeps resolving them — the same reason
     manifests store relative ``data_dirs`` (ADVICE r6). The extractor
-    splits on the LAST occurrence of ``/<d>/`` in the absolute URI,
-    matching ``_read_files``'s ``rfind`` grouping; a hive partition
-    column literally named ``v`` with integer values could alias the
-    boundary, but every tag site uses this one extractor, so even
-    then the forms agree with each other."""
+    splits on the LAST occurrence of ``/<d>/`` in the absolute URI; a
+    hive partition column literally named ``v`` with integer values
+    could alias the boundary, but such tables scan one relation per
+    dir and every tag site uses this extractor, so even then the forms
+    agree with each other. Multi-dir relations tag through
+    ``_GROUP_REL_FILE``, the same form."""
     fp = F_sql.col("_metadata.file_path")
     return F_sql.concat(
         F_sql.lit(d + "/"), F_sql.substring_index(fp, "/" + d + "/", -1)
@@ -1108,56 +1119,15 @@ def read_version(
     spark: SparkSession, path: str, version: int | None = None
 ) -> DataFrame:
     """Time-travel read: the snapshot at ``version``, or the latest
-    committed one. Plain parquet scan of the manifest's ``data_dirs``
-    (one dir for independent snapshots, several for metadata-level
-    appends) — pruning/pushdown unchanged; partition columns are
-    discovered per listed root, so carried and new dirs form one
-    consistent partitioned table.
-
-    An EMPTY partitioned snapshot has no part files to infer a schema
-    from (the dir holds only _SUCCESS); the manifest records the
-    writer's schema for exactly this case — the Delta/Iceberg answer
-    — so empty versions read back as empty frames instead of
-    UNABLE_TO_INFER_SCHEMA, and appends to an all-filtered first
-    commit don't wedge the table."""
+    committed one — a plain parquet scan of the manifest's
+    ``data_dirs`` (``_scan_snapshot``), so pruning and pushdown apply
+    unchanged. The manifest schema is DECLARED, not inferred:
+    inference would launch a footer-read job per call, and an EMPTY
+    snapshot (no part files at all) reads back as an empty frame
+    instead of UNABLE_TO_INFER_SCHEMA, so appends to an all-filtered
+    first commit don't wedge the table."""
     version = _resolve_version(spark, path, version)
-    man = read_manifest(spark, path, version)
-    dirs = _manifest_dirs(man)
-    if (
-        len(dirs) == 1
-        and "/" not in dirs[0]
-        and _dir_mapping(man, dirs[0]) is None
-    ):
-        # DECLARE the manifest schema instead of inferring: inference
-        # launches a footer-read job per call (one lifecycle query
-        # re-opens its tables dozens of times), and the multi-dir
-        # branch below always declared anyway — the two paths now
-        # agree. Declared partition columns also come back with the
-        # writer's types directly, so _align_partition_types is a
-        # no-op instead of a cast layer over inference drift.
-        if "_schema" in man:
-            from pyspark.sql.types import StructType
-
-            return spark.read.schema(
-                StructType.fromJson(man["_schema"])
-            ).parquet(_dir_abs(path, man, dirs[0]))
-        # legacy manifest without a recorded schema: infer
-        return _align_partition_types(
-            spark.read.parquet(_dir_abs(path, man, dirs[0])), man
-        )
-    # multi-dir (carry_from / COW-merge) snapshot: each dir is its own
-    # partitioned root — one multi-path read would misparse the sibling
-    # v=<N> dirs as partition keys of the table parent. Per-dir scans
-    # unioned by name keep partition discovery per root (pruning
-    # intact: a filter on the partition column pushes into every
-    # branch), and the manifest schema makes empty dirs readable
-    # without inference. A NESTED entry (``v=<N>/date=x``, one carried
-    # partition of a COW merge) reads with basePath at its version
-    # root, so the partition column survives the subdir scan. Dirs
-    # written before a column rename/drop read under their ON-DISK
-    # schema and align to the current names by stable field id
-    # (_disk_schema_and_rename) — the Iceberg name-mapping read.
-    return _read_manifest_dirs(spark, path, man, dirs)
+    return _scan_snapshot(spark, path, read_manifest(spark, path, version))
 
 
 def _align_partition_types(df: DataFrame, man: dict) -> DataFrame:
@@ -1188,30 +1158,190 @@ def _align_partition_types(df: DataFrame, man: dict) -> DataFrame:
     return df
 
 
-def _read_manifest_dirs(
-    spark: SparkSession, path: str, man: dict, dirs: list[str]
+# Error conditions Spark raises while BUILDING a multi-dir relation
+# (a listing, no job) whose dirs don't share one partition layout — a
+# flat dir next to a hive-partitioned one after layout evolution.
+_LAYOUT_CONFLICTS = frozenset(
+    {"CONFLICTING_DIRECTORY_STRUCTURES", "CONFLICTING_PARTITION_COLUMN_NAMES"}
+)
+
+# The file tag of a relation scanned with basePath at the table root,
+# where each file's ``v=<N>`` head is the discovered partition column
+# ``v``: the text after the last ``/v=<N>/`` of the file's own head.
+# Byte-identical to ``_rel_file(d)`` for every dir of the group (no
+# column of a grouped relation is named ``v``, so no dir below the head
+# can alias the boundary), with plain string functions — a regex over
+# the group's dirs measured ~6x substring_index's per-row cost.
+_GROUP_REL_FILE = (
+    "concat('v=', CAST(v AS STRING), '/', substring_index("
+    "_metadata.file_path, concat('/v=', CAST(v AS STRING), '/'), -1))"
+)
+
+
+def _scan_snapshot(
+    spark: SparkSession,
+    path: str,
+    man: dict,
+    *,
+    dirs: list[str] | None = None,
+    files: list[str] | None = None,
+    tag: str | None = None,
 ) -> DataFrame:
-    """Per-dir scans of a manifest's dirs unioned by name — the
-    multi-dir body of ``read_version``, reusable over a SUBSET of the
-    dirs (incremental compaction reads only the small ones)."""
+    """The one scan of a manifest's data: every dir it lists, a
+    SUBSET ``dirs`` of them (incremental compaction and zone maps read
+    only the new ones), or an explicit TABLE-RELATIVE file list
+    ``files`` (``v=3/date=x/f.parquet``, the sidecar convention;
+    legacy absolute entries still resolve; an empty list returns an
+    empty frame with the manifest schema). ``tag`` prepends the file
+    identity sidecars key on, from ``_metadata`` of the scan itself:
+    ``"file"`` (the relative file, zone maps and Bloom indexes) or
+    ``"position"`` (``_dv_file``, ``_dv_pos`` — the (file, row) pairs
+    deletion vectors are defined over).
+
+    A snapshot is many dirs — one per commit since the last OPTIMIZE —
+    and planning cost grows with the number of relations, so the dirs
+    share as few ``spark.read.parquet(*paths)`` relations as the layout
+    allows. A group scans with ``basePath`` at its root: the sibling
+    ``v=<N>`` dirs then parse as a partition column ``v`` (declared in
+    the read schema so file-less dirs keep it), which tags the files
+    and is dropped; hive columns below the head are discovered as
+    usual, and a nested copy-on-write entry (``v=<N>/date=x``) keeps
+    its ``date``. Dirs group by what one relation cannot mix:
+      * rename mapping — dirs written before a column rename/drop read
+        under their ON-DISK schema and align to the current names by
+        stable field id (``_disk_schema_and_rename``);
+      * root — shallow-clone dirs resolve under their source table
+        (``_dir_root``);
+      * layout — flat and hive dirs in one relation raise a
+        ``_LAYOUT_CONFLICTS`` error while it is built, and that group
+        falls back to one relation per dir (each then prunes alone).
+    Groups stay below Spark's parallel-listing threshold (a listing
+    JOB past it), and tables without a recorded schema, or with a
+    column named ``v``, keep one relation per dir. File-less dirs
+    (metadata-only commits) list no files and add no rows."""
     from functools import reduce
 
-    def _read_dir(d: str) -> DataFrame:
-        read_schema, align = _disk_schema_and_rename(man, d)
-        r = (
-            spark.read.schema(read_schema)
-            if read_schema is not None
-            else spark.read
-        )
-        root = _dir_root(path, man, d)
-        if "/" in d:
-            r = r.option("basePath", f"{root}/{d.split('/', 1)[0]}")
-        branch = r.parquet(f"{root}/{d}")
-        return align(branch) if align is not None else branch
+    from pyspark.errors import PySparkException
+    from pyspark.sql.types import IntegerType, StructField, StructType
 
+    tag_cols = {
+        None: (), "file": ("file",), "position": ("_dv_file", "_dv_pos")
+    }[tag]
+    if files is not None and not files:
+        schema = (
+            StructType.fromJson(man["_schema"])
+            if "_schema" in man
+            # legacy manifest without a recorded schema: infer from data
+            else _scan_snapshot(spark, path, man).schema
+        )
+        empty = empty_df(spark, schema)
+        types = {"file": "string", "_dv_file": "string", "_dv_pos": "long"}
+        return empty.select(
+            *[F_sql.lit(None).cast(types[c]).alias(c) for c in tag_cols],
+            *empty.columns,
+        )
+    # scan units: (anchor, root, paths, basePath when scanned alone).
+    # The anchor is the dir a unit's files are tagged relative to: the
+    # manifest dir itself, or the version head of a file subset.
+    units: list[tuple[str, str, list[str], str | None]] = []
+    if files is None:
+        for d in dirs if dirs is not None else _manifest_dirs(man):
+            root = _dir_root(path, man, d)
+            head = d.split("/", 1)[0]
+            base = f"{root}/{head}" if "/" in d else None
+            units.append((d, root, [f"{root}/{d}"], base))
+    else:
+        by_head: dict[tuple[str, str], list[str]] = {}
+        for f in files:
+            if f.startswith("/") or "://" in f:
+                # legacy absolute entry: <table>/v=3/[part=x/]f.parquet
+                i = f.rfind("/v=")
+                if i < 0:
+                    raise ValueError(
+                        f"unexpected data file path (no v= segment): {f}"
+                    )
+                root, rel = f[:i], f[i + 1:]
+            else:
+                root, rel = _dir_root(path, man, f.split("/", 1)[0]), f
+            head = rel.split("/", 1)[0]
+            by_head.setdefault((root, head), []).append(f"{root}/{rel}")
+        for (root, head), fl in sorted(by_head.items()):
+            units.append((head, root, sorted(fl), f"{root}/{head}"))
+
+    groups: dict[tuple[str, str], list] = {}
+    for u in units:
+        mapping = json.dumps(_dir_mapping(man, u[0]), sort_keys=True)
+        groups.setdefault((mapping, u[1]), []).append(u)
+
+    def _scan(batch: list, read_schema, align) -> DataFrame:
+        anchor, root, paths, base = batch[0]
+        grouped = len(batch) > 1
+        r = spark.read
+        if grouped:
+            v = StructField("v", IntegerType())
+            r = r.schema(StructType([*read_schema.fields, v]))
+            r = r.option("basePath", root)
+            paths = [p for m in batch for p in m[2]]
+        else:
+            if read_schema is not None:
+                r = r.schema(read_schema)
+            if base is not None:
+                r = r.option("basePath", base)
+        rel = r.parquet(*paths)
+        if tag_cols:
+            # (file, pos) for "position", the file alone for "file"
+            ids = (
+                F_sql.expr(_GROUP_REL_FILE) if grouped else _rel_file(anchor),
+                F_sql.col("_metadata.row_index"),
+            )
+            rel = rel.select(
+                *[c.alias(n) for c, n in zip(ids, tag_cols)], *rel.columns
+            )
+        if grouped:
+            rel = rel.drop("v")
+        return align(rel, keep=tag_cols) if align is not None else rel
+
+    frames: list[DataFrame] = []
+    cap = None
+    for members in groups.values():
+        read_schema, align = _disk_schema_and_rename(man, members[0][0])
+        batches = [[m] for m in members]
+        if (
+            len(members) > 1
+            and read_schema is not None
+            and all(f.name.lower() != "v" for f in read_schema.fields)
+        ):
+            cap = cap or int(spark.conf.get(
+                "spark.sql.sources.parallelPartitionDiscovery.threshold"
+            ))
+            batches = []
+            for m in members:
+                n = len(m[2])
+                if batches and sum(len(x[2]) for x in batches[-1]) + n <= cap:
+                    batches[-1].append(m)
+                else:
+                    batches.append([m])
+        for batch in batches:
+            try:
+                frames.append(_scan(batch, read_schema, align))
+            except PySparkException as exc:
+                cond = exc.getCondition()
+                if len(batch) > 1 and cond in _LAYOUT_CONFLICTS:
+                    frames += [_scan([m], read_schema, align) for m in batch]
+                elif cond != "UNABLE_TO_INFER_SCHEMA":
+                    # only a genuinely EMPTY dir of a legacy manifest (no
+                    # recorded schema to scan under) is skippable; an
+                    # unreadable or mis-vacuumed dir must propagate, or a
+                    # MOR writer silently misses its rows (ADVICE r6)
+                    raise
+    if not frames:
+        raise FileNotFoundError(f"snapshot under {path} has no data files")
+    # partition columns inferred from dir names come back with the
+    # manifest schema's types (booleans/narrow ints drift under
+    # inference), or a MOR writer's re-appended rows fail the commit
+    # schema check
     return _align_partition_types(
-        reduce(lambda a, b: a.unionByName(b), [_read_dir(d) for d in dirs]),
-        man,
+        reduce(lambda a, b: a.unionByName(b), frames), man
     )
 
 
@@ -2019,7 +2149,7 @@ def compact_incremental(
     if len(small) < min_dirs:
         return latest
     big = [d for d in dirs if d not in set(small)]
-    rows = _read_manifest_dirs(spark, path, man, small)
+    rows = _scan_snapshot(spark, path, man, dirs=small)
     part = man.get("_partition_by") or None
     carried_meta = {
         k: v

@@ -53,12 +53,11 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from temp_data_pipeline_spark.operators.versioned import (
-    _dir_root,
     _fs,
     _manifest_dirs,
-    _rel_file,
     _rel_from_any,
     _resolve_version,
+    _scan_snapshot,
     commit_version,
     read_manifest,
     read_version,
@@ -155,7 +154,9 @@ def write_zone_maps(
             # pure rollback/no-op commit: nothing new to scan
             stats = prev_kept
             return _publish_zone_maps(spark, path, version, stats)
-    df = _scan_files_with_rows(spark, path, version, dirs=dirs)
+    df = _scan_snapshot(
+        spark, path, read_manifest(spark, path, version), dirs=dirs, tag="file"
+    )
     aggs = [F.count(F.lit(1)).cast("long").alias("n_rows")]
     for c in columns:
         lo, hi = F.min(c), F.max(c)
@@ -374,18 +375,15 @@ def _semi_join_scan(
     construction; used when the survivor count exceeds the driver
     cap, where pruning is weak and the scan approaches full cost
     anyway."""
+    man = read_manifest(spark, path, version)
     if with_positions:
-        from temp_data_pipeline_spark.operators.deletion_vectors import (
-            _scan_with_positions,
-        )
-
-        tagged = _scan_with_positions(spark, path, version)
+        tagged = _scan_snapshot(spark, path, man, tag="position")
         return tagged.join(
             survivors.withColumnRenamed("file", "_dv_file"),
             "_dv_file",
             "left_semi",
         )
-    tagged = _scan_files_with_rows(spark, path, version)
+    tagged = _scan_snapshot(spark, path, man, tag="file")
     return tagged.join(survivors, "file", "left_semi").drop("file")
 
 
@@ -404,10 +402,10 @@ def read_version_skipped(
     row filter. Result ≡ ``read_version(...).filter(...)`` always;
     the zone maps only decide how few files get opened.
 
-    Files are grouped by their ``v=<N>`` version root and each group
-    scans with ``basePath`` at that root, so hive partition columns
-    survive explicit-file reads across carried directories. An empty
-    survivor set returns an empty frame with the manifest schema.
+    The surviving files scan as one relation per table root
+    (``versioned._scan_snapshot``), so hive partition columns survive
+    explicit-file reads across carried directories. An empty survivor
+    set returns an empty frame with the manifest schema.
 
     The survivor list reaches the driver only while it stays under
     ``max_driver_files`` — decided by ONE ``limit(cap+1)`` collect
@@ -435,89 +433,15 @@ def _read_files(
     *,
     with_positions: bool = False,
 ) -> DataFrame:
-    """Scan an explicit file list of a version: files group by their
-    ``v=<N>`` root and each group scans with ``basePath`` at that
-    root, so hive partition columns survive explicit-file reads
-    across carried directories. Entries are TABLE-RELATIVE
-    (``v=3/date=x/f.parquet``, the sidecar convention) — legacy
-    absolute paths still resolve. An empty list returns an empty
-    frame with the manifest schema. ``with_positions`` prepends the
-    (_dv_file, _dv_pos) columns deletion vectors subtract on, tagged
-    with the same relative form the DV sidecars store."""
-    from functools import reduce
-
-    from pyspark.sql.types import StructType
-
-    from temp_data_pipeline_spark.operators.versioned import (
-        _disk_schema_and_rename,
-    )
-
-    man = read_manifest(spark, path, version)
-    schema = (
-        StructType.fromJson(man["_schema"]) if "_schema" in man else None
-    )
-    if not files:
-        if schema is None:
-            # legacy manifest without a recorded schema: infer from data
-            schema = read_version(spark, path, version).schema
-        from temp_data_pipeline_spark.operators.versioned import empty_df
-
-        empty = empty_df(spark, schema)
-        if with_positions:
-            empty = empty.select(
-                F.lit(None).cast("string").alias("_dv_file"),
-                F.lit(None).cast("long").alias("_dv_pos"),
-                *empty.columns,
-            )
-        return empty
-    # group by version-root head: (absolute basePath, relative head)
-    by_root: dict[tuple[str, str], list[str]] = {}
-    for f in files:
-        if f.startswith("/") or "://" in f:
-            # legacy absolute entry: .../<table>/v=3/[part=x/]f.parquet
-            i = f.rfind("/v=")
-            if i < 0:
-                raise ValueError(
-                    f"unexpected data file path (no v= segment): {f}"
-                )
-            j = f.find("/", i + 1)
-            head = f[i + 1 : j] if j > 0 else f[i + 1 :]
-            root = f[:j] if j > 0 else f
-            absolute = f
-        else:
-            head = f.split("/", 1)[0]
-            # clone-aware: a shallow-clone reference resolves under
-            # its source root (versioned._dir_root)
-            troot = _dir_root(path, man, head)
-            root = f"{troot}/{head}"
-            absolute = f"{troot}/{f}"
-        by_root.setdefault((root, head), []).append(absolute)
-
-    def _scan(root: str, head: str, fl: list[str]) -> DataFrame:
-        # dirs written before a column rename scan under their ON-DISK
-        # names and align to the current names by stable field id
-        read_schema, align = _disk_schema_and_rename(man, head)
-        r = (
-            spark.read.schema(read_schema)
-            if read_schema is not None
-            else spark.read
-        )
-        branch = r.option("basePath", root).parquet(*sorted(fl))
-        if with_positions:
-            branch = branch.select(
-                _rel_file(head).alias("_dv_file"),
-                F.col("_metadata.row_index").alias("_dv_pos"),
-                *branch.columns,
-            )
-        if align is not None:
-            branch = align(
-                branch, keep=("_dv_file", "_dv_pos") if with_positions else ()
-            )
-        return branch
-
-    return reduce(
-        lambda a, b: a.unionByName(b),
-        [_scan(root, head, fl) for (root, head), fl in sorted(by_root.items())],
+    """Scan an explicit TABLE-RELATIVE file list of a version
+    (``versioned._scan_snapshot``); ``with_positions`` prepends the
+    (_dv_file, _dv_pos) columns deletion vectors subtract on."""
+    return _scan_snapshot(
+        spark,
+        path,
+        read_manifest(spark, path, version),
+        files=files,
+        tag="position" if with_positions else None,
     )
 
 
@@ -874,7 +798,9 @@ def write_bloom_index(
             prev_kept = prev.filter(cond)
         if not dirs:
             return _publish_bloom(spark, path, version, column, prev_kept)
-    zm_like = _scan_files_with_rows(spark, path, version, dirs=dirs)
+    zm_like = _scan_snapshot(
+        spark, path, read_manifest(spark, path, version), dirs=dirs, tag="file"
+    )
     if incremental_from is None:
         max_rows = (
             zm_like.groupBy("file")
@@ -925,55 +851,6 @@ def _publish_bloom(
     if not fs.rename(Path(tmp), Path(final)):
         raise IOError(f"bloom publish failed for {final}")
     return version
-
-
-def _scan_files_with_rows(
-    spark: SparkSession,
-    path: str,
-    version: int,
-    dirs: list[str] | None = None,
-) -> DataFrame:
-    """All rows of a version (or of the subset ``dirs`` of its data
-    dirs) tagged with their producing file — the shared multi-dir
-    `_metadata.file_path` scan (see write_zone_maps for why the
-    projection must happen inside each branch). Files are tagged by
-    their TABLE-RELATIVE path (``versioned._rel_file``) so sidecars
-    survive a table relocation like the manifests they describe."""
-    from functools import reduce
-
-    from pyspark.errors.exceptions.captured import AnalysisException
-    from pyspark.sql.types import StructType
-
-    man = read_manifest(spark, path, version)
-    schema = (
-        StructType.fromJson(man["_schema"]) if "_schema" in man else None
-    )
-
-    def _scan(d: str) -> DataFrame:
-        r = spark.read.schema(schema) if schema is not None else spark.read
-        root = _dir_root(path, man, d)
-        if "/" in d:
-            r = r.option("basePath", f"{root}/{d.split('/', 1)[0]}")
-        branch = r.parquet(f"{root}/{d}")
-        return branch.select(_rel_file(d).alias("file"), *branch.columns)
-
-    frames = []
-    for d in dirs if dirs is not None else _manifest_dirs(man):
-        try:
-            frames.append(_scan(d))
-        except AnalysisException as exc:
-            # only a genuinely EMPTY dir (zero-row legacy commit, no
-            # recorded schema to scan under) is skippable; a missing
-            # or unreadable carried dir must propagate or the sidecar
-            # silently under-covers the version (ADVICE r6)
-            if "UNABLE_TO_INFER_SCHEMA" in str(exc):
-                continue
-            raise
-    if not frames:
-        raise FileNotFoundError(
-            f"version {version} under {path} has no data files"
-        )
-    return reduce(lambda a, b: a.unionByName(b), frames)
 
 
 def _bloom_survivors(

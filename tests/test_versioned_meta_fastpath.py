@@ -121,7 +121,12 @@ def test_versions_nonlocal_defaultfs_uses_hadoop_listing(spark, tmp_path):
         assert versions(spark, path) == [v]
         assert read_manifest(spark, path, v)["version"] == v
     finally:
-        spark._sg_defaultfs_local = saved if saved is not None else True
+        # an unset memo must stay unset: forcing True would pin every
+        # later test in the session to the local fast path
+        if saved is None:
+            del spark._sg_defaultfs_local
+        else:
+            spark._sg_defaultfs_local = saved
 
 
 def test_empty_commit_records_declared_nullability(spark, tmp_path):
